@@ -23,28 +23,27 @@ import org.apache.spark.sql.DataFrame
   */
 private[graft] object Checkpoints {
 
-  /** Eager localCheckpoint plus a release() handle that unpersists
-    * exactly this checkpoint's blocks. release() must only be called
-    * once nothing will read the frame again (the next iterate is
-    * itself checkpointed — not merely derived). */
-  def tracked(df: DataFrame): (DataFrame, () => Unit) = {
-    val out = df.localCheckpoint(true)
-    val rdd = org.apache.spark.sql.graftbridge.ColumnBridge.backingRdd(out)
-    (out, () => rdd.foreach(_.unpersist(blocking = false)))
-  }
-
-  /** [[tracked]] that ALSO returns the row count, in ONE action: the
-    * checkpoint is taken lazily and the count job is what materializes
-    * (and persists) it. Convergence-checked loops (k-core's per-round
-    * live-edge count) previously paid two jobs per round — eager
-    * checkpoint materialization, then a separate count over the fresh
-    * blocks; at 100 TB that second pass re-reads the whole round's
-    * working set. */
-  def trackedCounted(df: DataFrame): (DataFrame, Long, () => Unit) = {
+  /** Lazy localCheckpoint plus ONE caller-supplied action over it:
+    * the action's job is the first over the marked RDD, so it computes
+    * and persists the blocks and yields the result in one pass (k-core's
+    * degree histogram, HITS's normalizer). The action must read every
+    * partition, or be a no-op that leaves the materializing to the
+    * first job reading the frame. release() unpersists exactly this
+    * checkpoint's blocks; call it only once nothing will read the frame
+    * again (the next iterate is itself materialized, not just derived). */
+  def trackedWith[A](df: DataFrame)(action: DataFrame => A)
+      : (DataFrame, A, () => Unit) = {
     val out = df.localCheckpoint(false)
     val rdd = org.apache.spark.sql.graftbridge.ColumnBridge.backingRdd(out)
-    val n = out.count() // first action over the marked RDD: computes,
-                        // persists the blocks, and counts in one pass
-    (out, n, () => rdd.foreach(_.unpersist(blocking = false)))
+    val result = action(out)
+    (out, result, () => rdd.foreach(_.unpersist(blocking = false)))
+  }
+
+  /** [[trackedWith]] whose action only materializes: the count of the
+    * backing RDD, the same single job an eager localCheckpoint runs. */
+  def tracked(df: DataFrame): (DataFrame, () => Unit) = {
+    val (out, _, release) = trackedWith(df)(
+      org.apache.spark.sql.graftbridge.ColumnBridge.backingRdd(_).foreach(_.count()))
+    (out, release)
   }
 }

@@ -46,20 +46,17 @@ object Hits {
     var hub = e.select(col("hub_id")).distinct().withColumn("hub", lit(1.0))
     var auth: DataFrame = null
     // checkpoint + normalization denominator in ONE action per
-    // half-iteration (the Checkpoints.trackedCounted pattern): the
-    // lazy checkpoint's materializing action is the max aggregate
-    // itself, and the max rides to the driver as that job's result —
-    // a driver-side scalar, exactly the single row the previous
+    // half-iteration (Checkpoints.trackedWith): the lazy checkpoint's
+    // materializing action is the max aggregate itself, and the max
+    // rides to the driver as that job's result — a driver-side scalar,
+    // exactly the single row the previous
     // crossJoin(broadcast(asum.agg(max))) formulation collected anyway,
     // minus the BroadcastExchange build and the nested-loop-join node
     // per half-iteration. The division is the same IEEE op against the
     // same max, so scores are bit-identical.
-    def checkpointWithMax(df: DataFrame): (DataFrame, Double, () => Unit) = {
-      val out = df.localCheckpoint(false)
-      val rdd = org.apache.spark.sql.graftbridge.ColumnBridge.backingRdd(out)
-      val r = out.agg(max(col("s"))).head() // materializes the checkpoint
-      val mx = if (r.isNullAt(0)) Double.NaN else r.getDouble(0) // empty side
-      (out, mx, () => rdd.foreach(_.unpersist(blocking = false)))
+    def maxOfS(df: DataFrame): Double = {
+      val r = df.agg(max(col("s"))).head()
+      if (r.isNullAt(0)) Double.NaN else r.getDouble(0) // empty side
     }
     // deterministic block release: hsum_{t-1} frees once asum_t
     // materializes (hub_t is a lazy view over it); asum_t frees once
@@ -72,9 +69,9 @@ object Hits {
       // unmaterialized asum would run the edge join + groupBy twice
       // per half-iteration. The normalization itself is a node-sized
       // scan with a literal divisor — cheap to leave lazy.
-      val (asum, amax, releaseAsum) = checkpointWithMax(
+      val (asum, amax, releaseAsum) = Checkpoints.trackedWith(
         e.join(hub, Seq("hub_id"))
-          .groupBy(col("auth_id")).agg(sum(col("hub")).as("s")))
+          .groupBy(col("auth_id")).agg(sum(col("hub")).as("s")))(maxOfS)
       releaseHsum()
       // StableScalar, not lit: the max changes every half-iteration, and
       // an inlined double makes each iteration's fused stage a distinct
@@ -85,9 +82,9 @@ object Hits {
       auth = asum.select(col("auth_id"),
         (floor(col("s") / graft.functions.StableScalar.col(amax) * Q)
           / lit(Q.toDouble)).as("auth"))
-      val (hsum, hmax, rh) = checkpointWithMax(
+      val (hsum, hmax, rh) = Checkpoints.trackedWith(
         e.join(auth, Seq("auth_id"))
-          .groupBy(col("hub_id")).agg(sum(col("auth")).as("s")))
+          .groupBy(col("hub_id")).agg(sum(col("auth")).as("s")))(maxOfS)
       if (i < iterations) releaseAsum()
       releaseHsum = rh
       hub = hsum.select(col("hub_id"),

@@ -10,18 +10,28 @@ import org.apache.spark.sql.functions._
   * (spam pages, orphan entities) before link-based scoring like
   * PageRank/HITS.
   *
-  * Each round: one degree aggregation over the live edge set, one
-  * semi-join to drop edges touching sub-k nodes. Rounds are
-  * barrier-synchronous (like every Pregel-style loop here); per-round
-  * work is linear in the live edge count and the live set only
-  * shrinks. A tracked eager checkpoint after each round caps lineage
-  * AND releases the previous round's blocks deterministically
-  * ([[Checkpoints.tracked]] — relying on the ContextCleaner retained
-  * R rounds of edge copies). The k-core is UNIQUE (the
-  * maximal subgraph with min degree >= k), which is what lets the gate
-  * oracle certify the result exactly: (a) every survivor keeps >= k
-  * surviving neighbors, (b) every removed node has < k surviving
-  * neighbors — (a)+(b) hold only for the true k-core.
+  * Degree-first rounds, barrier-synchronous like every Pregel-style
+  * loop here. Round r aggregates the live edge set into the node-degree
+  * table and runs ONE action: it collects the table's degree histogram
+  * as (degree, nodes) pairs. The live edges and the degree table are
+  * lazy tracked checkpoints ([[Checkpoints]]), so that action's job
+  * materializes both. k is a function of the round-0 histogram (a
+  * fixed k is `_ => k`), so a data-derived k costs no pass of its own.
+  *
+  * Stop rule: the histogram's smallest degree is >= k, or it is empty.
+  * The live set is then the k-core and its degree table IS the result:
+  * no round that only confirms convergence, no count, no final
+  * re-aggregation. Otherwise a semi-join filter keeps the edges whose
+  * endpoints both have degree >= k; that is round r+1's live set. Work
+  * per round is linear in the live edge count, which only shrinks.
+  * Round r's blocks are released once round r+1 has materialized
+  * (relying on the ContextCleaner retained R rounds of edge copies).
+  *
+  * The k-core is UNIQUE (the maximal subgraph with min degree >= k),
+  * which is what lets the gate oracle certify the result exactly:
+  * (a) every survivor keeps >= k surviving neighbors, (b) every
+  * removed node has < k surviving neighbors — (a)+(b) hold only for
+  * the true k-core.
   *
   * Reference has no k-core operator; this rides the same edge tables
   * as [[PageRank]]/[[Hits]] (Gelly, the reference's graph library, is
@@ -29,63 +39,52 @@ import org.apache.spark.sql.functions._
   */
 object KCore {
 
+  /** Degree histogram of an edge set: (degree, nodes with that
+    * degree), ascending by degree. */
+  type Histogram = Seq[(Long, Long)]
+
   /** Surviving nodes of the k-core with their in-core degree.
     * `edges` must be a SYMMETRIC simple edge list (src, dst) — use
-    * [[symmetrize]] for a directed/one-sided input. */
-  def run(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
-      maxRounds: Int = 100): DataFrame = {
-    require(k >= 1, "k must be >= 1")
-    val pre = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    // The round-0 working set: when the input is CHEAP to rescan (leaf
-    // scans + stateless row ops only — typically a caller-checkpointed
-    // edge list), round 1's two consumers re-read it directly and the
-    // count is a bare aggregate: 3 reads, no copy. Copying it into a
-    // fresh checkpoint first (read + write + 2 reads of the copy) was
-    // a whole wasted pass over the full edge set at any scale. Inputs
-    // that DO re-run real work per scan (joins/aggregates/explodes
-    // below) keep the materializing trackedCounted.
-    var (live, n, release) =
-      if (cheapToRescan(pre)) (pre, pre.count(), () => ())
-      else Checkpoints.trackedCounted(pre)
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < maxRounds) {
-      // shuffle_hash on the node-sized keep side (guide §3, the
-      // PageRank finding): left-semi against a derived table falls
-      // back to SortMergeJoin — sorting the full live edge set TWICE
-      // per peel round; the hash semi-join streams the edges unsorted.
-      val keep = live.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k).select(col("src")).hint("shuffle_hash")
-      val (next, m, releaseNext) = Checkpoints.trackedCounted(live
-        .join(keep, Seq("src"), "left_semi")
-        .join(keep.withColumnRenamed("src", "dst"), Seq("dst"), "left_semi")
-        .select(col("src"), col("dst")))
-      release() // round t-1's blocks: next is materialized, free them
-      converged = m == n
+    * [[symmetrize]] for a directed/one-sided input. `k` is applied
+    * once, to the input's degree histogram. `maxRounds` bounds the
+    * rounds that remove edges. */
+  def run(edges: DataFrame, srcCol: String, dstCol: String,
+      k: Histogram => Int, maxRounds: Int = 100): DataFrame = {
+    def degrees(liveEdges: DataFrame) = Checkpoints.trackedWith(
+      liveEdges.groupBy(col("src")).agg(count(lit(1)).as("deg")))(histogram)
+    var (live, _, releaseLive) = Checkpoints.trackedWith(
+      edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))(_ => ())
+    var (deg, hist, releaseDeg) = degrees(live)
+    val kk = k(hist)
+    require(kk >= 1, "k must be >= 1")
+    var removals = 0
+    while (hist.nonEmpty && hist.head._1 < kk) {
+      require(removals < maxRounds,
+        s"k-core peel did not converge within $maxRounds rounds " +
+          s"(${hist.map { case (d, m) => d * m }.sum} live edges remain); " +
+          "raise maxRounds — the current live set would NOT be a k-core")
+      // both semi-joins read the SAME keep frame, so AQE builds one
+      // broadcast for both; no join hint, so it may broadcast at all
+      val keep = deg.filter(col("deg") >= kk).select(col("src").as("node"))
+      val (next, _, releaseNext) = Checkpoints.trackedWith(live
+        .join(keep, col("src") === col("node"), "left_semi")
+        .join(keep, col("dst") === col("node"), "left_semi"))(_ => ())
+      val (nextDeg, nextHist, releaseNextDeg) = degrees(next)
+      releaseLive() // round r+1 is materialized: free round r
+      releaseDeg()
       live = next
-      release = releaseNext
-      n = m
-      rounds += 1
+      releaseLive = releaseNext
+      deg = nextDeg
+      hist = nextHist
+      releaseDeg = releaseNextDeg
+      removals += 1
     }
-    require(converged || n == 0,
-      s"k-core peel did not converge within $maxRounds rounds " +
-        s"($n live edges remain); raise maxRounds — the current live " +
-        "set would NOT be a k-core")
-    live.groupBy(col("src")).agg(count(lit(1)).as("core_deg"))
-      .select(col("src").as("node"), col("core_deg"))
+    releaseLive()
+    deg.select(col("src").as("node"), col("deg").as("core_deg"))
   }
 
-  /** Rescan-vs-checkpoint break-even (the ChangelogInference
-    * discipline): only leaf scans and stateless row ops below → a
-    * rescan costs one read, cheaper than writing a copy first. */
-  private def cheapToRescan(df: DataFrame): Boolean = {
-    import org.apache.spark.sql.catalyst.plans.{logical => lg}
-    df.queryExecution.analyzed.collectFirst {
-      case _: lg.Generate => (); case _: lg.Aggregate => ()
-      case _: lg.Window => (); case _: lg.Join => ()
-      case _: lg.Sort => (); case _: lg.Distinct => ()
-    }.isEmpty
-  }
+  private def histogram(deg: DataFrame): Histogram =
+    deg.rdd.map(_.getLong(1)).countByValue().toSeq.sortBy(_._1)
 
   /** Undirected simple view of a directed edge list: both directions,
     * self-loops dropped, duplicates collapsed. */

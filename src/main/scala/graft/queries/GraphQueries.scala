@@ -235,8 +235,7 @@ object GraphQueries {
     // exactly — same replay discipline as lpaOracle. The gate query
     // below stays as belt-and-suspenders.
     QueryDef("q_kcore", (s, dir) => {
-      val (und, k) = kcoreInput(s, dir)
-      graft.operators.KCore.run(und, "src", "dst", k)
+      graft.operators.KCore.run(kcoreEdges(s, dir), "src", "dst", kcoreK)
         .orderBy(col("node"))
     }, Some("""
       WITH RECURSIVE und AS MATERIALIZED (
@@ -248,7 +247,7 @@ object GraphQueries {
       degs AS MATERIALIZED (
         SELECT src, COUNT(*) AS deg FROM und GROUP BY src),
       -- k = max(min_degree + 1, exact 60th-percentile degree), the same
-      -- driver-side derivation as kcoreInput (integer division!)
+      -- derivation as kcoreK (integer division!)
       kparam AS MATERIALIZED (
         SELECT GREATEST(
           (SELECT MIN(deg) FROM degs) + 1,
@@ -290,9 +289,11 @@ object GraphQueries {
     // together they pin the unique maximal min-degree->=k subgraph.
     QueryDef("q_kcore_gate", (s, dir) => {
       import s.implicits._
-      val (und, k) = kcoreInput(s, dir)
-      val core = graft.operators.KCore.run(und, "src", "dst", k)
-        .localCheckpoint(true)
+      // checkpointed: the peel and the checks below all read it
+      val und = kcoreEdges(s, dir).localCheckpoint(true)
+      var k = 0 // the k the peel derived, certified below
+      val core = graft.operators.KCore.run(und, "src", "dst",
+        h => { k = kcoreK(h); k })
       val survivors = core.select(col("node"))
       val coreEdges = und
         .join(survivors.withColumnRenamed("node", "src"), Seq("src"),
@@ -329,30 +330,24 @@ object GraphQueries {
       bench = false)
   )
 
-  /** Symmetrized part—supplier graph + the data-derived peel threshold:
-    * k = max(min_degree + 1, exact 60th-percentile degree). Both stats
-    * come from one tiny degree aggregate (driver model state, like the
-    * k-means centroids). */
-  private def kcoreInput(s: org.apache.spark.sql.SparkSession,
-      dir: String): (org.apache.spark.sql.DataFrame, Int) = {
-    val e0 = t(s, dir, "lineitem").select(
+  /** Symmetrized part—supplier graph, the k-core queries' input. */
+  private def kcoreEdges(s: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.DataFrame =
+    graft.operators.KCore.symmetrize(t(s, dir, "lineitem").select(
       (col("l_partkey") * 2).as("src"),
-      (col("l_suppkey") * 2 + 1).as("dst"))
-    val und = graft.operators.KCore.symmetrize(e0, "src", "dst")
-      .localCheckpoint(true)
-    // degs is node-sized; checkpoint it so the three stat reads below
-    // (count, p60, min) cost three tiny scans instead of three full
-    // degree aggregations over the edge checkpoint — two whole edge
-    // passes removed at any scale.
-    val degs = und.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint(true)
-    val n = degs.count()
-    val idx = ((n - 1) * 6 / 10).toInt
-    val p60 = degs.orderBy(col("deg"), col("src")).limit(idx + 1)
-      .orderBy(col("deg").desc, col("src")).limit(1)
-      .head().getLong(1)
-    val minDeg = degs.agg(min(col("deg"))).head().getLong(0)
-    (und, math.max(minDeg + 1, p60).toInt)
+      (col("l_suppkey") * 2 + 1).as("dst")), "src", "dst")
+
+  /** The data-derived peel threshold, read off the round-0 degree
+    * histogram: k = max(min_degree + 1, exact 60th-percentile degree).
+    * The percentile is the degree at index (n-1)*6/10 of the nodes
+    * sorted by degree — the oracle breaks ties by src, which cannot
+    * change the degree found there. */
+  private def kcoreK(h: graft.operators.KCore.Histogram): Int = {
+    val idx = (h.map(_._2).sum - 1) * 6 / 10
+    val below = h.scanLeft(0L)(_ + _._2) // nodes of lower degree
+    val p60 = h.zip(below).collectFirst {
+      case ((d, m), lo) if idx < lo + m => d }.getOrElse(0L)
+    math.max(h.headOption.fold(0L)(_._1) + 1, p60).toInt
   }
 
   /** Chained-CTE LPA replay: l_i votes from l_{i-1}, argmax via

@@ -19,4 +19,11 @@ class RegistrySpec extends SparkSpec {
     }
     assert(failures.isEmpty, failures.mkString("\n"))
   }
+
+  test("q_kcore_gate certifies the k-core on sf0.001") {
+    // the gate's rows are its checks; a wrong peel or k flips one
+    val rows = Registry.byName("q_kcore_gate").run(spark, sfDir).collect()
+    assert(rows.length == 4 && rows.forall(_.getAs[Boolean]("ok")),
+      rows.mkString(", "))
+  }
 }
